@@ -43,9 +43,28 @@ def data_dir() -> str:
         d = parent
 
 
+def _cpu_ticks() -> list[int]:
+    """System-wide CPU ticks from /proc/stat (user, nice, system, idle,
+    iowait, irq, softirq, steal); empty where there is no /proc."""
+    try:
+        with open("/proc/stat") as fh:
+            return [int(x) for x in fh.readline().split()[1:9]]
+    except (OSError, ValueError):
+        return []
+
+
+_TICKS0 = _cpu_ticks()
+
+
 def facts() -> dict:
-    """Sandbox facts printed with every run."""
+    """Sandbox facts printed with every run, including the share of CPU
+    time the hypervisor stole from this machine since the run started:
+    a busy host slows every timing together."""
+    t1 = _cpu_ticks()
+    d = [b - a for a, b in zip(_TICKS0, t1)]
     return {
+        "steal_share": round(d[7] / max(1, sum(d)), 3) if len(d) == 8
+        else None,
         "nproc": os.cpu_count(),
         "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
         "clients": 1,
@@ -136,26 +155,20 @@ class Op:
 
 class Alternate:
     """Picks the traced ops of a traced run: every other op of each kind,
-    so each kind also runs untraced and gives the tracing overhead."""
+    starting with the first, so a kind that runs once is traced and a kind
+    that runs more often also runs untraced, giving the tracing
+    overhead."""
 
     def __init__(self, on: bool):
         self.on, self.seen = on, Counter()
 
     def __call__(self, kind: str) -> bool:
         self.seen[kind] += 1
-        return self.on and self.seen[kind] % 2 == 0
+        return self.on and self.seen[kind] % 2 == 1
 
 
 def median(xs: list[float]) -> float:
     return statistics.median(xs) if xs else 0.0
-
-
-def p90(xs: list[float]) -> float:
-    """Nearest-rank 90th percentile."""
-    if not xs:
-        return 0.0
-    s = sorted(xs)
-    return s[min(len(s) - 1, max(0, -(-9 * len(s) // 10) - 1))]
 
 
 def kind_medians(ops: list[Op]) -> dict[str, float]:
@@ -165,21 +178,16 @@ def kind_medians(ops: list[Op]) -> dict[str, float]:
     return {k: median(v) for k, v in by.items()}
 
 
-def kind_median_sum(ops: list[Op]) -> float:
-    """Sum over op kinds of each kind's median latency: insensitive to how
-    many ops of each kind a run happened to finish."""
-    return sum(kind_medians(ops).values())
-
-
 def end_to_end(ops: list[Op], window_s: float, setup_s: float,
                stored_bytes_per_row: float) -> dict:
-    lat = [o.seconds for o in ops]
     return {
         "setup_s": (setup_s, "s"),
-        "headline_s": (kind_median_sum(ops), "s"),
+        # Sum over op kinds of each kind's median latency: insensitive to
+        # how many ops of each kind a run happened to finish.
+        "headline_s": (sum(kind_medians(ops).values()), "s"),
         "ops_per_s": (len(ops) / window_s, "1/s"),
-        "latency_p50_s": (median(lat), "s"),
-        "latency_p90_s": (p90(lat), "s"),
+        "read_p50_s": (median([o.seconds for o in ops if not o.write]),
+                       "s"),
         "stored_bytes_per_row": (stored_bytes_per_row, "B/row"),
     }
 

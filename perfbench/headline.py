@@ -28,6 +28,11 @@ QUERIES = [
     "doc_dedup_exact_text",
     "embedding_knn_brute",
 ]
+# One warm-up pass. Timed passes still drift down after it (e.g. 5.0,
+# 3.9, 3.4 s), as they did after two; the median of MIN_PASSES timed
+# passes takes the middle one on every run, and a second warm-up pass
+# (~5 s) does not fit the run budget.
+WARM_PASSES = 1
 MIN_PASSES = 3
 MIRRORED = ("documents", "events", "embeddings", "lineitem", "orders")
 ORACLE_TABLES = ("region nation customer supplier part orders lineitem "
@@ -69,6 +74,23 @@ def _oracle_frames(sf_dir: str, names: list[str]) -> dict[str, pd.DataFrame]:
     return out
 
 
+def _mirror_dir() -> str:
+    """Where the checkout keeps the mirror for the code checked out: keyed
+    by a hash of every ``heracles_spark`` source file, so any change to
+    the package builds a new mirror (``layout.prepare``'s own manifest
+    covers the data)."""
+    pkg = os.path.join(common.ROOT, "heracles_spark")
+    h = hashlib.sha1()
+    for d, subdirs, names in os.walk(pkg):
+        subdirs.sort()
+        for name in sorted(n for n in names if n.endswith(".py")):
+            path = os.path.join(d, name)
+            h.update(os.path.relpath(path, pkg).encode() + b"\0")
+            with open(path, "rb") as fh:
+                h.update(fh.read())
+    return os.path.join(common.WORK_ROOT, f"layout-{h.hexdigest()[:16]}")
+
+
 def _mirror(dest: str, sf_dir: str) -> tuple[dict[str, int], int, int]:
     """Files per table, and total bytes and rows, of the mirror's tables
     (a table the mirror leaves unsplit is read from its source file)."""
@@ -101,20 +123,26 @@ def run(spark, args, work, session_s: float, tracer=None) -> None:
     sf_dir = common.data_dir()
     rng = random.Random(args.seed)
 
-    # Set-up: the engine's bulk-load mirror (built once per checkout and
-    # reused while its manifest is current, as bench.py does), then one
-    # warm-up pass so the JIT and codegen caches settle before timing.
-    t0 = now()
-    dest, _ = layout.prepare(spark, sf_dir)
+    # Set-up: the engine's bulk-load mirror for the code checked out
+    # (built by the first run of a checkout and reused while current, as
+    # bench.py does; its build time is the traced run's
+    # layout.prepare_s), then warm-up passes so the JIT and codegen
+    # caches settle before timing. setup_s leaves the mirror out, so it
+    # reads the same on the run that built it.
+    t = now()
+    dest = layout.prepare(spark, sf_dir, dest=_mirror_dir())[0]
+    mirror_s = now() - t
     os.environ["HERACLES_LAYOUT_DIR"] = dest
+    t0 = now()
     registry = all_queries()
     fresh = {n: getattr(registry[n], "__wrapped_query__", registry[n])
              for n in QUERIES}
-    for name in rng.sample(QUERIES, len(QUERIES)):
-        try:
-            fresh[name](spark, sf_dir).collect()
-        except Exception:  # noqa: BLE001 - the timed pass reports it
-            pass
+    for _ in range(WARM_PASSES):
+        for name in rng.sample(QUERIES, len(QUERIES)):
+            try:
+                fresh[name](spark, sf_dir).collect()
+            except Exception:  # noqa: BLE001 - the timed pass reports it
+                pass
     setup_s = session_s + now() - t0
 
     ops: list[Op] = []
@@ -122,7 +150,7 @@ def run(spark, args, work, session_s: float, tracer=None) -> None:
     last: dict[str, tuple] = {}
     counts: Counter = Counter()
     pick = common.Alternate(bool(args.trace))
-    passes, start = 0, now()
+    passes, start, pass_s = 0, now(), []
     while True:
         for name in rng.sample(QUERIES, len(QUERIES)):
             op_id, df, t = len(ops), None, now()
@@ -148,8 +176,9 @@ def run(spark, args, work, session_s: float, tracer=None) -> None:
                 failed[name] += 1
                 ops.append(Op(name, now() - t, False, traced=traced))
         passes += 1
-        # At least MIN_PASSES, so every query's median has three samples
-        # even when a slow host fits fewer passes in the window.
+        pass_s.append(sum(o.seconds for o in ops[-len(QUERIES):]))
+        # At least MIN_PASSES even on a slow host, so one pass slowed by a
+        # busy host stays out of each query's median.
         if now() - start >= args.seconds and passes >= MIN_PASSES:
             break
     window_s = now() - start
@@ -172,7 +201,9 @@ def run(spark, args, work, session_s: float, tracer=None) -> None:
     _, nbytes, nrows = _mirror(dest, sf_dir)
     good = [o for o in ops if o.ok]
     common.note(ops, workload=args.workload, seed=args.seed, ops=len(ops),
-                passes=passes, session_s=round(session_s, 2),
+                passes=passes, pass_s=[round(p, 2) for p in pass_s],
+                session_s=round(session_s, 2),
+                mirror_s=round(mirror_s, 2),
                 setup_s=round(setup_s, 2), window_s=round(window_s, 2),
                 failed=sum(failed.values()), **common.facts())
     if not args.trace:

@@ -1,20 +1,23 @@
-"""keyed_ingest_mixed: a seeded op log of writes (LOAD DATA, INSERT VALUES,
-MERGE upserts, DELETE ranges, OPTIMIZE COMPACT, REFRESH INDEX) with
-``HeraclesSession.sql`` reads interleaved (point gets, key ranges, an
-indexed lookup, a metadata COUNT(*), a star join, a non-key predicate the
-router declines), on one key table rebuilt from an identical base every
-run. A DuckDB replay of the same log checks every read and the end
-state."""
+"""keyed_ingest_mixed: a seeded op log on one key table, rebuilt from an
+identical base every run. Each cycle runs every write kind once (LOAD
+DATA, INSERT VALUES, MERGE upsert, DELETE key range, then OPTIMIZE
+COMPACT and REFRESH INDEX), and after every write one read of each read
+kind through ``HeraclesSession.sql``: a point get and a key range (the
+router's pruned scans), an indexed lookup on a non-key column, and a
+non-key predicate the router declines. A DuckDB replay of the same log
+checks every read and the end state."""
 
 from __future__ import annotations
 
 import datetime
+import decimal
 import os
 import random
 import sys
 from collections import Counter
+from dataclasses import dataclass
 
-from perfbench import common, keyed
+from perfbench import common
 from perfbench.common import Op, now
 
 SETUP_REPS = 3
@@ -24,33 +27,142 @@ DUCK_CSV_COLS = ("{'o_orderkey': 'BIGINT', 'o_custkey': 'BIGINT', "
                  "'o_orderstatus': 'VARCHAR', 'o_totalprice': 'DOUBLE', "
                  "'o_orderdate': 'DATE', 'o_orderpriority': 'VARCHAR'}")
 PRIORITIES = ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-LOAD_ROWS, INSERT_ROWS, MERGE_ROWS = 1000, 40, 100
-# One cycle: every kind below in seeded order, then the maintenance pair.
-# Point gets and key ranges, the fastest kinds, are 18 of the 30 ops, so
-# the median rank falls inside their block rather than on the border
-# between two kinds of different latency; the slowest 10% are writes.
-KINDS = ("load", "insert", "insert", "merge", "delete",
-         *["point_read"] * 14, *["range_read"] * 4,
-         "indexed_read", "indexed_read", "count_read", "join_read",
-         "nonkey_read")
+# Batch sizes: a bulk LOAD of 20k rows and INSERT batches of 50 rows;
+# a MERGE upserts a batch of the same 50 rows, half of them existing
+# keys, and a DELETE removes a key range holding about 50 rows.
+LOAD_ROWS, BATCH_ROWS = 20000, 50
+# Range reads cover a key range of random width, up to 1% of the base
+# table's key domain.
+RANGE_SHARE = 0.01
+# Writes run once per cycle, the data writes in seeded order and the
+# maintenance pair after them. Every write is followed by one read of
+# each read kind, so each read kind runs equally often and sees the
+# table after every kind of write.
+DATA_WRITES = ("load", "insert", "merge", "delete")
 MAINTENANCE = ("optimize", "refresh_index")
-WRITES = {"load", "insert", "merge", "delete", "optimize", "refresh_index"}
+READS = ("point_read", "range_read", "indexed_read", "nonkey_read")
+# End-state check: row count and key/value checksums, the same SQL on
+# both engines. Each value term is weighted by a function of its key, so
+# a value moved to another key changes the sum.
+CHECKSUM = (
+    "SELECT COUNT(*) AS n, SUM(o_orderkey) AS k, "
+    "SUM(CAST(o_orderkey % 1009 AS BIGINT) * o_custkey) AS c, "
+    "SUM(CAST(o_orderkey % 1013 AS BIGINT) "
+    "* CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS p, "
+    "SUM(CAST(o_orderkey % 1019 AS BIGINT) * (year(o_orderdate) * 10000 "
+    "+ month(o_orderdate) * 100 + day(o_orderdate))) AS d, "
+    "SUM(CAST(o_orderkey % 1021 AS BIGINT) * (ascii(o_orderstatus) * 1000 "
+    "+ ascii(o_orderpriority) * 10 + length(o_orderpriority))) AS s "
+    "FROM orders")
 BUILD = (
-    "CREATE TABLE orders TBLPROPERTIES('keyCols'='o_orderkey', "
-    "'numBuckets'='8') AS SELECT * FROM src_orders",
-    "CREATE TABLE customer TBLPROPERTIES('keyCols'='c_custkey', "
-    "'numBuckets'='4') AS SELECT * FROM src_customer",
+    "CREATE TABLE orders TBLPROPERTIES('keyCols'='o_orderkey') "
+    "AS SELECT * FROM src_orders",
     "CREATE INDEX o_cust ON orders (o_custkey)",
 )
+
+
+@dataclass
+class Domain:
+    sf_dir: str
+    top: int                     # highest order key
+    orderkeys: list[int]
+    custkeys: list[int]
+    order_custkeys: list[int]    # customers that have orders
+
+
+def _src(sf_dir: str, table: str) -> str:
+    return os.path.join(sf_dir, f"{table}.parquet")
+
+
+def duck(sf_dir: str):
+    """DuckDB over the raw parquet, shaped like the key table: timestamps
+    as DATE (the key table's CTAS casts them too)."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE VIEW orders AS SELECT * REPLACE "
+                "(CAST(o_orderdate AS DATE) AS o_orderdate) "
+                f"FROM '{_src(sf_dir, 'orders')}'")
+    con.execute("CREATE VIEW customer AS SELECT * "
+                f"FROM '{_src(sf_dir, 'customer')}'")
+    return con
+
+
+def domain(sf_dir: str) -> Domain:
+    """Read the key domain the generated statements draw from."""
+    con = duck(sf_dir)
+
+    def col(sql):
+        return [r[0] for r in con.execute(sql).fetchall()]
+
+    orderkeys = col("SELECT o_orderkey FROM orders ORDER BY 1")
+    dom = Domain(
+        sf_dir, orderkeys[-1], orderkeys,
+        col("SELECT c_custkey FROM customer ORDER BY 1"),
+        col("SELECT DISTINCT o_custkey FROM orders ORDER BY 1"))
+    con.close()
+    return dom
+
+
+def register_sources(spark, sf_dir: str) -> None:
+    """The src_orders temp view the set-up's CTAS statement reads."""
+    from pyspark.sql import functions as F
+
+    df = spark.read.parquet(_src(sf_dir, "orders"))
+    for c, ty in df.dtypes:
+        if ty.startswith("timestamp"):
+            df = df.withColumn(c, F.col(c).cast("date"))
+    df.createOrReplaceTempView("src_orders")
+
+
+def run_sql(session, stmt: str):
+    df = session.sql(stmt)
+    return df.collect() if df is not None else None
+
+
+def traced_sql(spark, tracer, op_id: int, session, stmt: str, counts,
+               read: bool = True):
+    """One traced statement: (rows, seconds). Reads also count the
+    router's verdict from ``session.last_select_route``."""
+    from perfbench import tracing
+
+    rows = df = None
+    with tracing.SparkOp(spark, tracer, op_id) as so:
+        t = now()
+        df = session.sql(stmt)
+        if df is not None:
+            rows = so.collect(df)
+        dt = now() - t
+    so.finish(df, counts)
+    if read:
+        route = session.last_select_route
+        counts["sql.selects"] += 1
+        counts["sql.routed"] += bool(route.get("route"))
+        counts["sql.declined"] += bool(route.get("reason"))
+    return rows, dt
+
+
+def _norm(v):
+    if isinstance(v, (datetime.date, datetime.datetime)):
+        return v.isoformat()
+    if isinstance(v, decimal.Decimal):
+        return int(v) if v == v.to_integral_value() else float(v)
+    return v
+
+
+def norm_rows(rows) -> list[tuple]:
+    return sorted((tuple(_norm(v) for v in r) for r in rows), key=repr)
 
 
 class Log:
     """Generates the op log from the seed and a model of the live keys."""
 
-    def __init__(self, rng: random.Random, dom: keyed.Domain, work):
+    def __init__(self, rng: random.Random, dom: Domain, work):
         self.rng, self.dom, self.work = rng, dom, work
         self.live = set(dom.orderkeys)
-        self.next_key = dom.cut + 1
+        self.next_key = dom.top + 1
+        self.max_width = max(1, int(dom.top * RANGE_SHARE))
+        self.delete_width = round(BATCH_ROWS * dom.top / len(dom.orderkeys))
 
     def _row(self, key: int) -> tuple:
         r = self.rng
@@ -69,9 +181,10 @@ class Log:
     def _csv(rows) -> str:
         return "".join(",".join(map(str, r)) + "\n" for r in rows)
 
-    def _range(self, lo: int, hi: int) -> tuple[int, int]:
-        a = self.rng.randrange(1, self.next_key - hi)
-        return a, a + self.rng.randint(lo, hi)
+    def _range(self) -> tuple[int, int]:
+        w = self.rng.randint(1, self.max_width)
+        a = self.rng.randrange(1, self.next_key - w)
+        return a, a + w
 
     def _write(self, spark_sql: str, duck: list[str], rows=()) -> dict:
         return {"spark": spark_sql, "duck": duck, "rows": len(rows),
@@ -91,15 +204,15 @@ class Log:
                 [f"INSERT INTO orders SELECT * FROM read_csv('{path}', "
                  f"header=false, columns={DUCK_CSV_COLS})"], rows)
         if kind == "insert":
-            rows = self._new_rows(INSERT_ROWS)
+            rows = self._new_rows(BATCH_ROWS)
             stmt = "INSERT INTO orders VALUES " + ", ".join(
                 f"({k}, {c}, '{s}', {p}, '{d}', '{q}')"
                 for k, c, s, p, d, q in rows)
             return self._write(stmt, [stmt], rows)
         if kind == "merge":
-            old = r.sample(sorted(self.live), MERGE_ROWS * 3 // 5)
+            old = r.sample(sorted(self.live), BATCH_ROWS // 2)
             rows = ([self._row(k) for k in old]
-                    + self._new_rows(MERGE_ROWS - len(old)))
+                    + self._new_rows(BATCH_ROWS - len(old)))
             vals = ", ".join(f"({k}, {c}, '{s}', {p}, DATE '{d}', '{q}')"
                              for k, c, s, p, d, q in rows)
             keys = ", ".join(str(row[0]) for row in rows)
@@ -112,8 +225,8 @@ class Log:
                 [f"DELETE FROM orders WHERE o_orderkey IN ({keys})",
                  f"INSERT INTO orders VALUES {vals}"], rows)
         if kind == "delete":
-            a = r.randrange(1, self.dom.cut - 400)
-            b = a + r.randint(100, 400)
+            a = r.randrange(1, self.next_key - self.delete_width)
+            b = a + self.delete_width
             self.live.difference_update(range(a, b + 1))
             stmt = f"DELETE FROM orders WHERE o_orderkey BETWEEN {a} AND {b}"
             return self._write(stmt, [stmt])
@@ -125,23 +238,13 @@ class Log:
             stmt = ("SELECT * FROM orders WHERE o_orderkey = "
                     f"{r.choice(sorted(self.live))}")
         elif kind == "range_read":
-            a, b = self._range(200, 1500)
+            a, b = self._range()
             stmt = ("SELECT o_orderkey, o_custkey, o_totalprice FROM orders "
                     f"WHERE o_orderkey BETWEEN {a} AND {b}")
         elif kind == "indexed_read":
             stmt = ("SELECT o_orderkey, o_totalprice, o_orderstatus "
                     "FROM orders WHERE o_custkey = "
                     f"{r.choice(self.dom.order_custkeys)}")
-        elif kind == "count_read":
-            a, b = self._range(100, 5000)
-            stmt = ("SELECT COUNT(*) AS n FROM orders "
-                    f"WHERE o_orderkey BETWEEN {a} AND {b}")
-        elif kind == "join_read":
-            a, b = self._range(50, 1500)
-            stmt = ("SELECT c_mktsegment, COUNT(*) AS n, "
-                    "MAX(o_totalprice) AS mx FROM orders JOIN customer "
-                    f"ON o_custkey = c_custkey WHERE o_orderkey BETWEEN {a} "
-                    f"AND {b} GROUP BY c_mktsegment")
         elif kind == "nonkey_read":
             stmt = ("SELECT o_orderkey, o_totalprice FROM orders WHERE "
                     f"o_orderstatus = '{r.choice('OFP')}' AND "
@@ -151,32 +254,32 @@ class Log:
         return {"spark": stmt, "duck": [stmt], "read": True}
 
 
-def _replay(dom: keyed.Domain, done: list[tuple[dict, list | None]],
-            end_rows: list) -> tuple[int, str]:
+def _replay(dom: Domain, done: list[tuple[dict, list | None]],
+            end_sums: list) -> tuple[int, str]:
     """Replay the completed log on DuckDB: wrong reads plus a wrong end
-    state, and the end state's row count and key checksum."""
-    con = keyed.duck(dom.sf_dir, dom.cut)
+    state, and the end state's row count and key sum."""
+    con = duck(dom.sf_dir)
     con.execute("CREATE TABLE orders_base AS SELECT * FROM orders")
     con.execute("DROP VIEW orders")
     con.execute("ALTER TABLE orders_base RENAME TO orders")
     wrong = 0
     for spec, rows in done:
         if spec.get("read"):
-            want = keyed.norm_rows(con.execute(spec["duck"][0]).fetchall())
-            if keyed.norm_rows(rows) != want:
+            want = norm_rows(con.execute(spec["duck"][0]).fetchall())
+            if norm_rows(rows) != want:
                 wrong += 1
                 print(f"# WRONG read: {spec['spark'][:160]}", file=sys.stderr)
             continue
         for stmt in spec["duck"]:
             con.execute(stmt)
-    want = keyed.norm_rows(con.execute("SELECT * FROM orders").fetchall())
-    got = keyed.norm_rows(end_rows)
+    want = norm_rows(con.execute(CHECKSUM).fetchall())
+    got = norm_rows(end_sums)
     if got != want:
         wrong += 1
-        print(f"# WRONG end state: spark={len(got)} rows duckdb={len(want)}",
+        print(f"# WRONG end state: spark={got} duckdb={want}",
               file=sys.stderr)
     con.close()
-    return wrong, f"{len(got)}rows/keysum={sum(r[0] for r in got)}"
+    return wrong, f"{got[0][0]}rows/keysum={got[0][1]}"
 
 
 def run(spark, args, work, session_s: float, tracer=None) -> None:
@@ -185,27 +288,33 @@ def run(spark, args, work, session_s: float, tracer=None) -> None:
 
     sf_dir = common.data_dir()
     rng = random.Random(args.seed)
-    dom = keyed.domain(sf_dir)
-    keyed.register_sources(spark, sf_dir, dom.cut)
+    t = now()
+    dom = domain(sf_dir)
+    register_sources(spark, sf_dir)
+    domain_s = now() - t
 
-    # Set-up, repeated: the identical base tables and index in a fresh
+    # Set-up, repeated: the identical base table and index in a fresh
     # metastore each time; the last one takes the run's writes.
     builds = []
     for _ in range(SETUP_REPS):
         t = now()
         session = HeraclesSession(spark, metastore_dir=work.path("meta"))
         for stmt in BUILD:
-            keyed.run_sql(session, stmt)
+            run_sql(session, stmt)
         builds.append(now() - t)
-    setup_s = session_s + common.median(builds)
     # Warm-up on a throwaway clone, so the run starts from the base just
     # built.
-    keyed.run_sql(session, "CREATE TABLE warm SHALLOW CLONE orders")
+    t = now()
+    run_sql(session, "CREATE TABLE warm SHALLOW CLONE orders")
     for stmt in ("SELECT * FROM warm WHERE o_orderkey = 7",
                  "SELECT COUNT(*) FROM warm WHERE o_orderkey < 500",
                  "DELETE FROM warm WHERE o_orderkey BETWEEN 1 AND 20",
                  "OPTIMIZE warm COMPACT"):
-        keyed.run_sql(session, stmt)
+        run_sql(session, stmt)
+    warm_s = now() - t
+    # Set-up as a user pays it once: session, sources, one build (the
+    # median of the repeats) and the warm-up.
+    setup_s = session_s + domain_s + common.median(builds) + warm_s
 
     log = Log(rng, dom, work)
     ops: list[Op] = []
@@ -216,13 +325,16 @@ def run(spark, args, work, session_s: float, tracer=None) -> None:
     pick = common.Alternate(bool(args.trace))
     cycles, start = 0, now()
     while True:
-        for kind in rng.sample(KINDS, len(KINDS)) + list(MAINTENANCE):
+        cycle = []
+        for w in rng.sample(DATA_WRITES, len(DATA_WRITES)) + list(MAINTENANCE):
+            cycle += [w, *rng.sample(READS, len(READS))]
+        for kind in cycle:
             spec = log.op(kind)
-            write, op_id, rows, t = kind in WRITES, len(ops), None, now()
+            write, op_id, rows, t = kind not in READS, len(ops), None, now()
             traced = pick(kind)
             try:
                 if traced:
-                    rows, dt = keyed.traced_sql(spark, tracer, op_id,
+                    rows, dt = traced_sql(spark, tracer, op_id,
                                                 session, spec["spark"],
                                                 counts, read=not write)
                 else:
@@ -246,42 +358,42 @@ def run(spark, args, work, session_s: float, tracer=None) -> None:
                                         for f in new)
                 written["user_bytes"] += spec["user_bytes"]
         cycles += 1
-        # A traced run traces every second op of a kind: two cycles at
-        # least, so kinds that run once a cycle are traced too.
-        if now() - start >= args.seconds and cycles > args.trace:
+        # Whole cycles only, so every kind runs.
+        if now() - start >= args.seconds:
             break
     window_s = now() - start
 
-    end_rows = keyed.run_sql(session, "SELECT * FROM orders")
-    wrong, summary = _replay(dom, done, end_rows)
+    t = now()
+    wrong, summary = _replay(dom, done, run_sql(session, CHECKSUM))
+    check_s = now() - t
     failed = sum(1 for o in ops if not o.ok) + wrong
     tbl = session.catalog.get_table("orders")
     nbytes, nrows = common.files_bytes_rows(tbl.files)
     good = [o for o in ops if o.ok]
-    reads = [o.seconds for o in good if not o.write]
+    reads = [o for o in good if not o.write]
     writes = [o for o in good if o.write]
     common.note(ops, workload=args.workload, seed=args.seed, ops=len(ops),
                 cycles=cycles, reads=len(reads), writes=len(writes),
                 session_s=round(session_s, 2),
+                domain_s=round(domain_s, 2),
                 builds=[round(b, 2) for b in builds],
-                window_s=round(window_s, 2), end_state=summary, wrong=wrong,
+                warm_s=round(warm_s, 2), window_s=round(window_s, 2),
+                check_s=round(check_s, 2), end_state=summary, wrong=wrong,
                 live_files=len(tbl.files), **common.facts())
     if not args.trace:
         metrics = common.end_to_end(good, window_s, setup_s,
                                     nbytes / max(1, nrows))
     else:
-        write_s = sum(o.seconds for o in writes)
         extra = {
             "catalog.live_files": (len(tbl.files), "count"),
             "writer.files_written": (written["files"], "count"),
             "writer.bytes_written": (written["bytes"], "B"),
             "writer.write_amp": (written["bytes"]
                                  / max(1, written["user_bytes"]), "ratio"),
-            "ingest.read_p50_s": (common.median(reads), "s"),
             "ingest.write_p50_s": (common.median(
                 [o.seconds for o in writes]), "s"),
             "ingest.rows_per_s": (sum(o.rows for o in writes)
-                                  / max(write_s, 1e-9), "1/s"),
+                                  / sum(o.seconds for o in writes), "1/s"),
         }
         metrics = layers.traced_metrics(spark, tracer, ops, counts, sf_dir,
                                         extra, work.trace_path(args))

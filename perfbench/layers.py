@@ -44,7 +44,7 @@ PER_LAYER = {
     "exec.exchanges": "count",
     "exec.agg_fallback_tasks": "count",
     "exec.floor_s": "s",
-    # sql router (keyed workloads)
+    # sql router (keyed_ingest_mixed)
     "sql.dispatch_s": "s",
     "sql.routed_share": "ratio",
     "sql.declined": "count",
@@ -70,15 +70,14 @@ PER_LAYER = {
     "writer.write_amp": "ratio",
     "dml.delete_s": "s",
     "merge.merge_s": "s",
-    # op classes of keyed_ingest_mixed, whole run
-    "ingest.read_p50_s": "s",
+    # the write class of keyed_ingest_mixed, whole run
     "ingest.write_p50_s": "s",
     "ingest.rows_per_s": "1/s",
     # the benchmark's own share and the cost of tracing
     "bench.self_s": "s",
     "trace.overhead_s": "s",
     "trace.spans": "count",
-    "trace.self_over_wall_ops": "count",
+    "trace.misnested_ops": "count",
 }
 _EXEC = ("jobs", "stages", "tasks", "scan_files", "scan_bytes",
          "shuffle_bytes", "spill_bytes", "exchanges", "agg_fallback_tasks")
@@ -154,7 +153,7 @@ def traced_metrics(spark, tracer: tracing.Tracer, ops: list[Op],
     out["catalog.commits"] = (tc["catalog.commit"] / n, "count")
     out["trace.overhead_s"] = (_overhead(ops), "s")
     out["trace.spans"] = (len(tracer.spans), "count")
-    out["trace.self_over_wall_ops"] = (tracer.check_self_sum(), "count")
+    out["trace.misnested_ops"] = (tracer.misnested_ops(), "count")
     out.update(extra or {})
     if trace_path:
         tracer.dump(trace_path)

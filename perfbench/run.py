@@ -17,7 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-WORKLOADS = ("analytic_headline", "keyed_sql_serving", "keyed_ingest_mixed")
+WORKLOADS = ("analytic_headline", "keyed_ingest_mixed")
 
 
 def main() -> None:
@@ -29,7 +29,7 @@ def main() -> None:
     # holding only the benchmark fails here, before any result.
     import heracles_spark.session  # noqa: F401
 
-    from perfbench import headline, ingest, serving, tracing
+    from perfbench import headline, ingest, tracing
 
     work = common.Work()
     spark = None
@@ -40,7 +40,7 @@ def main() -> None:
         if args.trace:
             tracer = tracing.Tracer()
             tracer.install()
-        mod = {"analytic_headline": headline, "keyed_sql_serving": serving,
+        mod = {"analytic_headline": headline,
                "keyed_ingest_mixed": ingest}[args.workload]
         mod.run(spark, args, work, session_s, tracer)
     finally:

@@ -62,7 +62,6 @@ class Tracer:
         self.counts: Counter = Counter()
         self.prunes: list[tuple[list[str], object]] = []
         self._next = 0
-        self._undo: list = []
 
     # -- spans --------------------------------------------------------------
     def _open(self, name: str) -> dict:
@@ -139,7 +138,6 @@ class Tracer:
                 cls = getattr(mod, cls_name)
                 orig = cls.__dict__[meth]
                 setattr(cls, meth, self._wrap(orig, name))
-                self._undo.append((cls, meth, orig))
                 continue
             orig = getattr(mod, attr)
             wrapped = self._wrap(orig, name)
@@ -147,12 +145,6 @@ class Tracer:
                 if (getattr(m, "__name__", "").startswith("heracles_spark")
                         and getattr(m, attr, None) is orig):
                     setattr(m, attr, wrapped)
-                    self._undo.append((m, attr, orig))
-
-    def uninstall(self) -> None:
-        for owner, attr, orig in reversed(self._undo):
-            setattr(owner, attr, orig)
-        self._undo.clear()
 
     def _wrap(self, fn, name: str):
         tracer = self
@@ -188,12 +180,34 @@ class Tracer:
                 0.0, s["end"] - s["start"] - child[s["id"]])
         return out
 
-    def check_self_sum(self) -> int:
-        """Ops whose layer self-times sum past their traced wall time."""
-        walls = {s["op"]: s["end"] - s["start"] for s in self.spans
-                 if s["name"] == "op" and s["end"] is not None}
-        return sum(1 for op, st in self.self_times().items()
-                   if sum(st.values()) > walls.get(op, 0.0) + 1e-6)
+    def misnested_ops(self) -> int:
+        """Ops whose spans do not nest: a span that starts before or ends
+        after its parent, or two siblings that overlap (as when the package
+        calls a wrapped function from a second thread, since the span
+        stack is shared). Only when every op nests do its layer self times
+        sum to at most its traced wall time."""
+        by_op: dict = defaultdict(list)
+        for s in self.spans:
+            by_op[s["op"]].append(s)
+        bad = 0
+        for spans in by_op.values():
+            by_id = {s["id"]: s for s in spans}
+            kids: dict = defaultdict(list)
+            for s in spans:
+                if s["parent"] is not None:
+                    kids[s["parent"]].append(s)
+            ok = all(s["end"] is not None for s in spans)
+            for pid, cs in kids.items():
+                if not ok:
+                    break
+                p = by_id.get(pid)
+                cs = sorted(cs, key=lambda c: c["start"])
+                ok = (p is not None and p["start"] <= cs[0]["start"]
+                      and max(c["end"] for c in cs) <= p["end"]
+                      and all(a["end"] <= b["start"]
+                              for a, b in zip(cs, cs[1:])))
+            bad += not ok
+        return bad
 
     def layer_metrics(self, n_ops: int) -> dict[str, float]:
         """Mean self seconds per traced op, per layer metric."""
