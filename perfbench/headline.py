@@ -28,11 +28,10 @@ QUERIES = [
     "doc_dedup_exact_text",
     "embedding_knn_brute",
 ]
-# One warm-up pass. Timed passes still drift down after it (e.g. 5.0,
-# 3.9, 3.4 s), as they did after two; the median of MIN_PASSES timed
-# passes takes the middle one on every run, and a second warm-up pass
-# (~5 s) does not fit the run budget.
-WARM_PASSES = 1
+# Two warm-up passes: after one, the timed passes still drifted down
+# (e.g. 5.0, 3.9, 3.4 s) and headline_s spread 0.19 over ten seeds;
+# after two, 0.14.
+WARM_PASSES = 2
 MIN_PASSES = 3
 MIRRORED = ("documents", "events", "embeddings", "lineitem", "orders")
 ORACLE_TABLES = ("region nation customer supplier part orders lineitem "
