@@ -326,7 +326,8 @@ def run(spark, args, work, session_s: float, tracer=None) -> None:
     cycles, start = 0, now()
     while True:
         cycle = []
-        for w in rng.sample(DATA_WRITES, len(DATA_WRITES)) + list(MAINTENANCE):
+        order = rng.sample(DATA_WRITES, len(DATA_WRITES)) + [*MAINTENANCE]
+        for w in order:
             cycle += [w, *rng.sample(READS, len(READS))]
         for kind in cycle:
             spec = log.op(kind)
@@ -334,9 +335,9 @@ def run(spark, args, work, session_s: float, tracer=None) -> None:
             traced = pick(kind)
             try:
                 if traced:
-                    rows, dt = traced_sql(spark, tracer, op_id,
-                                                session, spec["spark"],
-                                                counts, read=not write)
+                    rows, dt = traced_sql(spark, tracer, op_id, session,
+                                          spec["spark"], counts,
+                                          read=not write)
                 else:
                     df = session.sql(spec["spark"])
                     if df is not None:
