@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import os
 import shutil
 import statistics
@@ -171,6 +172,11 @@ def median(xs: list[float]) -> float:
     return statistics.median(xs) if xs else 0.0
 
 
+def geomean(xs) -> float:
+    xs = list(xs)
+    return math.exp(sum(map(math.log, xs)) / len(xs)) if xs else 0.0
+
+
 def kind_medians(ops: list[Op]) -> dict[str, float]:
     by: dict[str, list[float]] = {}
     for o in ops:
@@ -186,8 +192,12 @@ def end_to_end(ops: list[Op], window_s: float, setup_s: float,
         # how many ops of each kind a run happened to finish.
         "headline_s": (sum(kind_medians(ops).values()), "s"),
         "ops_per_s": (len(ops) / window_s, "1/s"),
-        "read_p50_s": (median([o.seconds for o in ops if not o.write]),
-                       "s"),
+        # Geometric mean over read kinds of each kind's median latency:
+        # every read kind weighs the same, and unlike a median pooled
+        # over all reads it cannot jump from one kind's latency to
+        # another's when one op is slower.
+        "read_gmean_s": (geomean(kind_medians(
+            [o for o in ops if not o.write]).values()), "s"),
         "stored_bytes_per_row": (stored_bytes_per_row, "B/row"),
     }
 

@@ -28,10 +28,12 @@ QUERIES = [
     "doc_dedup_exact_text",
     "embedding_knn_brute",
 ]
-# Two warm-up passes: after one, the timed passes still drifted down
-# (e.g. 5.0, 3.9, 3.4 s) and headline_s spread 0.19 over ten seeds;
-# after two, 0.14.
-WARM_PASSES = 2
+# Five warm-up passes: the JIT keeps speeding passes up until about
+# the ninth (one 70 s run after two warm-up passes timed 3.78, 3.37,
+# 2.88, 2.98, 2.67, 2.48, 2.42, 2.50, 2.30 s, then 2.2-2.5 s). With two,
+# the timed passes still drifted and headline_s spread 0.10 over five
+# seeds; more than five do not fit the time budget.
+WARM_PASSES = 5
 MIN_PASSES = 3
 MIRRORED = ("documents", "events", "embeddings", "lineitem", "orders")
 ORACLE_TABLES = ("region nation customer supplier part orders lineitem "

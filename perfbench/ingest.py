@@ -1,11 +1,11 @@
 """keyed_ingest_mixed: a seeded op log on one key table, rebuilt from an
 identical base every run. Each cycle runs every write kind once (LOAD
 DATA, INSERT VALUES, MERGE upsert, DELETE key range, then OPTIMIZE
-COMPACT and REFRESH INDEX), and after every write one read of each read
-kind through ``HeraclesSession.sql``: a point get and a key range (the
-router's pruned scans), an indexed lookup on a non-key column, and a
-non-key predicate the router declines. A DuckDB replay of the same log
-checks every read and the end state."""
+COMPACT and REFRESH INDEX), and after every write two reads through
+``HeraclesSession.sql``, each read kind three times a cycle: a point
+get and a key range (the router's pruned scans), an indexed lookup on a
+non-key column, and a non-key predicate the router declines. A DuckDB
+replay of the same log checks every read and the end state."""
 
 from __future__ import annotations
 
@@ -21,6 +21,7 @@ from perfbench import common
 from perfbench.common import Op, now
 
 SETUP_REPS = 3
+MIN_CYCLES = 2
 COLS = ("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
 DUCK_CSV_COLS = ("{'o_orderkey': 'BIGINT', 'o_custkey': 'BIGINT', "
@@ -35,12 +36,13 @@ LOAD_ROWS, BATCH_ROWS = 20000, 50
 # table's key domain.
 RANGE_SHARE = 0.01
 # Writes run once per cycle, the data writes in seeded order and the
-# maintenance pair after them. Every write is followed by one read of
-# each read kind, so each read kind runs equally often and sees the
-# table after every kind of write.
+# maintenance pair after them. Every write is followed by two reads,
+# drawn in seeded order from three rounds of the read kinds, so each
+# read kind runs equally often.
 DATA_WRITES = ("load", "insert", "merge", "delete")
 MAINTENANCE = ("optimize", "refresh_index")
 READS = ("point_read", "range_read", "indexed_read", "nonkey_read")
+READS_PER_WRITE = 2
 # End-state check: row count and key/value checksums, the same SQL on
 # both engines. Each value term is weighted by a function of its key, so
 # a value moved to another key changes the sum.
@@ -295,22 +297,22 @@ def run(spark, args, work, session_s: float, tracer=None) -> None:
 
     # Set-up, repeated: the identical base table and index in a fresh
     # metastore each time; the last one takes the run's writes.
-    builds = []
+    builds, sessions = [], []
     for _ in range(SETUP_REPS):
         t = now()
-        session = HeraclesSession(spark, metastore_dir=work.path("meta"))
+        sessions.append(HeraclesSession(spark,
+                                        metastore_dir=work.path("meta")))
         for stmt in BUILD:
-            run_sql(session, stmt)
+            run_sql(sessions[-1], stmt)
         builds.append(now() - t)
-    # Warm-up on a throwaway clone, so the run starts from the base just
-    # built.
+    session = sessions[-1]
+    # Warm-up on the first build's table, in its own metastore: every
+    # write kind, then every read kind. Without it the first timed MERGE
+    # ran 1.5x and the first LOAD 1.6x slower than later ones.
     t = now()
-    run_sql(session, "CREATE TABLE warm SHALLOW CLONE orders")
-    for stmt in ("SELECT * FROM warm WHERE o_orderkey = 7",
-                 "SELECT COUNT(*) FROM warm WHERE o_orderkey < 500",
-                 "DELETE FROM warm WHERE o_orderkey BETWEEN 1 AND 20",
-                 "OPTIMIZE warm COMPACT"):
-        run_sql(session, stmt)
+    warm = Log(rng, dom, work)
+    for kind in (*DATA_WRITES, *MAINTENANCE, *READS):
+        run_sql(sessions[0], warm.op(kind)["spark"])
     warm_s = now() - t
     # Set-up as a user pays it once: session, sources, one build (the
     # median of the repeats) and the warm-up.
@@ -323,12 +325,15 @@ def run(spark, args, work, session_s: float, tracer=None) -> None:
     written: Counter = Counter()
     seen = {f["path"] for f in session.catalog.get_table("orders").files}
     pick = common.Alternate(bool(args.trace))
-    cycles, start = 0, now()
+    cycles, cycle_s, start = 0, [], now()
     while True:
+        t_cycle = now()
         cycle = []
         order = rng.sample(DATA_WRITES, len(DATA_WRITES)) + [*MAINTENANCE]
-        for w in order:
-            cycle += [w, *rng.sample(READS, len(READS))]
+        reads = [k for _ in range(len(order) * READS_PER_WRITE // len(READS))
+                 for k in rng.sample(READS, len(READS))]
+        for i, w in enumerate(order):
+            cycle += [w, *reads[i * READS_PER_WRITE:(i + 1) * READS_PER_WRITE]]
         for kind in cycle:
             spec = log.op(kind)
             write, op_id, rows, t = kind not in READS, len(ops), None, now()
@@ -359,8 +364,12 @@ def run(spark, args, work, session_s: float, tracer=None) -> None:
                                         for f in new)
                 written["user_bytes"] += spec["user_bytes"]
         cycles += 1
-        # Whole cycles only, so every kind runs.
-        if now() - start >= args.seconds:
+        cycle_s.append(now() - t_cycle)
+        # Whole cycles only, so every kind runs; at least MIN_CYCLES, so
+        # each write kind has more than one sample; no further cycle
+        # once it would be expected to end past --seconds.
+        if (cycles >= MIN_CYCLES and now() - start
+                + common.median(cycle_s) > args.seconds):
             break
     window_s = now() - start
 
@@ -379,6 +388,7 @@ def run(spark, args, work, session_s: float, tracer=None) -> None:
                 domain_s=round(domain_s, 2),
                 builds=[round(b, 2) for b in builds],
                 warm_s=round(warm_s, 2), window_s=round(window_s, 2),
+                cycle_s=[round(c, 2) for c in cycle_s],
                 check_s=round(check_s, 2), end_state=summary, wrong=wrong,
                 live_files=len(tbl.files), **common.facts())
     if not args.trace:
